@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Common._
+import graft.streaming.Streams
 
 /** T13b–T13e: right-to-be-FORGOTTEN propagation into the engine's own
   * STORED artifacts (upstream: the idempotent re-ETL contract of
@@ -284,7 +285,7 @@ object Forget {
   // ——— T13e: ST24 BM25 dictionary ———
 
   /** The T13e core over an ARBITRARY tombstone frame: affected batches
-    * (by the store's own [[graft.streaming.Streams.dictBatches]] rule)
+    * (by the store's own rule, [[Streams.affectedBatches]])
     * re-derive from the purged raw slice; untouched batch partitions copy
     * VERBATIM (partials round-trip parquet bit-exactly) — the re-ETL
     * contract. Returns the affected batch ids so ForgetSpec can pin the
@@ -292,18 +293,14 @@ object Forget {
     * with a single-batch tombstone set the %37 gate rule can't produce. */
   private[llm] def forgottenDictInto(s: SparkSession, docs: DataFrame,
       tomb: DataFrame, baseC: String, outC: String): Seq[Long] = {
-    val nB = graft.streaming.Streams.dictBatches
-    // which batches must re-process? derived from the tombstones via
-    // the store's own batch rule — a bounded (≤ |batches|) driver list
-    val affected: Seq[Long] = tomb
-      .select(pmod(col("doc_id"), lit(nB)).as("batch_id")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val nB = Streams.dictBatches
+    val affected = Streams.affectedBatches(tomb, nB)
     s.read.parquet(baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .write.mode("overwrite").partitionBy("batch_id").parquet(outC)
     affected.foreach { bid =>
-      graft.streaming.Streams.dfStoreSink(
-        docs.filter(col("doc_id") % nB === bid)
+      Streams.dfStoreSink(
+        Streams.deliveryOf(docs, "doc_id", nB, bid)
           .join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti"),
         bid, outC)
     }
@@ -315,11 +312,11 @@ object Forget {
       val docs = t(s, d, "documents")
       val tomb = docs.select("doc_id").filter(tombstoned(col("doc_id")))
       forgottenDictInto(s, docs, tomb,
-        s"${graft.streaming.Streams.dfStoreDir(s, d)}/c", s"$dd/c")
+        s"${Streams.dfStoreDir(s, d)}/c", s"$dd/c")
     }
 
   val textForgetDict: Q = (s, d) =>
-    graft.streaming.Streams.dfStoreReadout(s, s"${forgottenDictStore(s, d)}/c")
+    Streams.dfStoreReadout(s, s"${forgottenDictStore(s, d)}/c")
 
   // ——— T13h: trainer-facing MANIFEST stores (shard export / corpus
   // release) — the pure-algebra forget ———
@@ -474,18 +471,16 @@ object Forget {
     * verbatim. Returns the affected batch ids for the partial-delta pin. */
   private[llm] def forgottenNoveltyInto(s: SparkSession, docs: DataFrame,
       tomb: DataFrame, baseN: String, outN: String): Seq[Long] = {
-    val nB = graft.streaming.Streams.dictBatches
-    val affected: Seq[Long] = tomb
-      .select(pmod(col("doc_id"), lit(nB)).as("b")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val nB = Streams.dictBatches
+    val affected = Streams.affectedBatches(tomb, nB)
     Seq("grams", "docs").foreach { part =>
       s.read.parquet(s"$baseN/$part")
         .filter(!col("batch_id").isin(affected: _*))
         .write.mode("overwrite").partitionBy("batch_id").parquet(s"$outN/$part")
     }
     affected.foreach { bid =>
-      graft.streaming.Streams.noveltyStoreSink(
-        docs.filter(col("doc_id") % nB === bid)
+      Streams.noveltyStoreSink(
+        Streams.deliveryOf(docs, "doc_id", nB, bid)
           .join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti"),
         bid, outN)
     }
@@ -497,11 +492,11 @@ object Forget {
       val docs = t(s, d, "documents").select("doc_id", "text")
       val tomb = docs.select("doc_id").filter(tombstoned(col("doc_id")))
       forgottenNoveltyInto(s, docs, tomb,
-        s"${graft.streaming.Streams.noveltyStoreDir(s, d)}/n", s"$dd/n")
+        s"${Streams.noveltyStoreDir(s, d)}/n", s"$dd/n")
     }
 
   val textForgetNovelty: Q = (s, d) =>
-    graft.streaming.Streams.noveltyStoreReadout(
+    Streams.noveltyStoreReadout(
       s, s"${forgottenNoveltyStore(s, d)}/n")
 
   // ——— T13j: the canonical/label store readout over forgotten labels ———
@@ -570,23 +565,20 @@ object Forget {
   private[llm] def forgottenLinesInto(s: SparkSession, docs: DataFrame,
       tomb: DataFrame, nB: Long, baseC: String, outC: String): Seq[Long] = {
     val tombDocs = docs.join(broadcast(tomb.select("doc_id")), Seq("doc_id"))
-    val affected: Seq[Long] = tombDocs
-      .select(pmod(col("doc_id"), lit(nB)).as("b")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val affected = Streams.affectedBatches(tombDocs, nB)
     s.read.parquet(baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .write.mode("overwrite").partitionBy("batch_id").parquet(outC)
     affected.foreach { bid =>
-      val neg = TextOps.lineFreqsOf(tombDocs.filter(col("doc_id") % nB === bid))
+      val neg = TextOps.lineFreqsOf(Streams.deliveryOf(tombDocs, "doc_id", nB, bid))
         .withColumnRenamed("ldf", "n_neg")
-      s.read.parquet(baseC).filter(col("batch_id") === bid)
-        .drop("batch_id")
-        .join(neg, Seq("lh"), "left")
-        .withColumn("n_docs", col("n_docs") - coalesce(col("n_neg"), lit(0L)))
-        .filter(col("n_docs") > 0)
-        .select(col("lh"), col("n_docs"), lit(bid).as("batch_id"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(outC)
+      Streams.writeBatch(
+        s.read.parquet(baseC).filter(col("batch_id") === bid)
+          .join(neg, Seq("lh"), "left")
+          .withColumn("n_docs", col("n_docs") - coalesce(col("n_neg"), lit(0L)))
+          .filter(col("n_docs") > 0)
+          .select("lh", "n_docs"),
+        bid, outC)
     }
     affected
   }
@@ -596,7 +588,7 @@ object Forget {
       val docs = t(s, d, "documents")
       val tomb = docs.select("doc_id").filter(tombstoned(col("doc_id")))
       forgottenLinesInto(s, docs, tomb, 2L,
-        s"${graft.streaming.Streams.lineStoreDir(s, d)}/c", s"$dd/c")
+        s"${Streams.lineStoreDir(s, d)}/c", s"$dd/c")
     }
 
   /** The purged corpus rewritten against the subtraction-patched
@@ -605,7 +597,7 @@ object Forget {
   val textForgetLines: Q = (s, d) =>
     TextOps.lineDedupAgainst(
       t(s, d, "documents").filter(!tombstoned(col("doc_id"))),
-      graft.streaming.Streams.lineStoreFreqs(s, s"${forgottenLineStore(s, d)}/c"))
+      Streams.lineStoreFreqs(s, s"${forgottenLineStore(s, d)}/c"))
 
   /** The in-plan rebuild-from-purged twin for the jx route. */
   def forgetLinesOf(docs: DataFrame): DataFrame = {
@@ -636,11 +628,11 @@ object Forget {
     s.read.parquet(baseDaily)
       .filter(!col("day").isin(affected: _*))
       .write.mode("overwrite").partitionBy("day").parquet(outDaily)
-    graft.operators.Aggregates.sketchPartialsOf(
+    graft.sources.Sinks.overwritePartitions(
+      graft.operators.Aggregates.sketchPartialsOf(
         ev.join(broadcast(tombUsers), Seq("user_id"), "left_anti")
-          .filter(date_format(col("ts"), "yyyy-MM-dd").isin(affected: _*)))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(outDaily)
+          .filter(date_format(col("ts"), "yyyy-MM-dd").isin(affected: _*))),
+      outDaily, "day")
     affected
   }
 

@@ -371,7 +371,7 @@ object TextOps {
     // ONE word explode shared by the NB and NLL gates (the repetition
     // gate is pure in-row work — see [[repetitionScoresOf]]), then ONE
     // vocabulary aggregate feeding BOTH gates' tables (the NB class
-    // counts AND the NLL frequency wc = cc + rc; class totals, vocab
+    // counts AND the NLL frequency wc; class totals, vocab
     // size and the corpus token total are exact integer sums over it),
     // then ONE scoring join computing BOTH votes' per-doc statistics.
     // r18 shape: 6 reads of toks (model counts, model totals, NB join,
@@ -387,18 +387,21 @@ object TextOps {
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .localCheckpoint()
+    // wc counts EVERY token, not cc + rc: a doc with a NULL source has a
+    // NULL `curated` flag, so its tokens sit in neither class count yet
+    // still belong to the standalone NLL gate's frequency table
     val wstats = toks.groupBy("w").agg(
         count(when(col("curated"), lit(1))).as("cc"),
-        count(when(!col("curated"), lit(1))).as("rc"))
+        count(when(!col("curated"), lit(1))).as("rc"),
+        count(lit(1)).as("wc"))
       .localCheckpoint()
     val tot = wstats.agg(sum("cc").as("c_n"), sum("rc").as("r_n"),
-      count(lit(1)).as("v"), sum(col("cc") + col("rc")).as("n_total"))
+      count(lit(1)).as("v"), sum("wc").as("n_total"))
     val model = wstats.crossJoin(broadcast(tot))
       .withColumn("lo",
         log((col("cc") + lit(1.0)) / (col("c_n") + col("v"))) -
           log((col("rc") + lit(1.0)) / (col("r_n") + col("v"))))
-      .select(col("w"), col("lo"), (col("cc") + col("rc")).as("wc"),
-        col("n_total"))
+      .select(col("w"), col("lo"), col("wc"), col("n_total"))
     val scored = toks.join(broadcast(model), Seq("w"))
       .groupBy("doc_id", "source")
       .agg(

@@ -16,17 +16,28 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** The one exactly-once store write: overwrite ONLY the partitions of
+    * `dir` that `df` carries (dynamic partition overwrite) and leave every
+    * sibling partition untouched, so a re-delivered or re-ETL'd partition
+    * replaces itself instead of appending duplicates. Every idempotent
+    * writer in the repo goes through here.
+    *
+    * The mode is a WRITER option, never session conf: a session-level
+    * dynamic mode would silently turn every later plain
+    * `mode("overwrite").partitionBy(…)` on the shared session from
+    * "replace the directory" into "replace the partitions present", and
+    * a rebuild would then leave stale partitions behind. */
+  def overwritePartitions(df: DataFrame, dir: String, partitionCols: String*): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(dir)
+
   /** S7: daily-index router — `partitionBy(day)` writes every row to its
-    * day's directory in a single job. Dynamic partition overwrite keeps
+    * day's directory in a single job; [[overwritePartitions]] keeps
     * re-ETL idempotent per day (only days present in `df` are rewritten).
     * SinksSpec proves pruning: a `day = X` read plans only that partition. */
   def dailyRouter(df: DataFrame, dir: String, tsCol: String = "ts"): Unit =
-    df.withColumn("day", date_format(col(tsCol), "yyyyMMdd"))
-      // writer-scoped option, NOT session conf: a session-level dynamic
-      // mode would silently change overwrite semantics for every later
-      // partitioned write on the shared session
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(dir)
+    overwritePartitions(
+      df.withColumn("day", date_format(col(tsCol), "yyyyMMdd")), dir, "day")
 
   /** S6: staged JSON-lines sink, one directory per etl key (the S3 staging
     * layout; gzip via codec to match the reference's .json.gz objects). */
@@ -42,10 +53,9 @@ object Sinks {
     * per-file tasks (the "small files problem" — at 100 TB the
     * difference between a scan dominated by S3 GETs and one dominated
     * by bytes). Compaction rewrites each partition to
-    * ⌈bytes / targetBytes⌉ files ATOMICALLY per partition via dynamic
-    * partition overwrite — readers never see a partial partition, and
-    * only partitions present in the rewrite are touched (same
-    * idempotency contract as the daily router).
+    * ⌈bytes / targetBytes⌉ files ATOMICALLY per partition via
+    * [[overwritePartitions]] — readers never see a partial partition, and
+    * only partitions present in the rewrite are touched.
     *
     * Rewrites everything it reads; an incremental driver would pass a
     * predicate selecting only decayed partitions (e.g. yesterday's). */
@@ -70,11 +80,9 @@ object Sinks {
       // Spark (rightly) refuses to overwrite a path a live plan still
       // reads; the checkpoint breaks that file dependency and makes the
       // per-partition swap safe
-      df.filter(col(colName) === value)
-        .localCheckpoint()
-        .repartition(n)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol).parquet(dir)
+      overwritePartitions(
+        df.filter(col(colName) === value).localCheckpoint().repartition(n),
+        dir, partitionCol)
     }
   }
 

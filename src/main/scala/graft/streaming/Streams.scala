@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.Common._
@@ -19,6 +19,20 @@ import graft.operators.Common._
   * the identical plan in batch mode (same `window()` expression) for the
   * DuckDB oracle — one definition, two execution modes, which is exactly
   * Structured Streaming's contract.
+  *
+  * The exactly-once store contract. Every streamed maintainer below is a
+  * batch store: a delivery writes its partials through [[writeBatch]],
+  * which tags them with the delivery's `batch_id` and overwrites exactly
+  * that batch's partitions
+  * ([[graft.sources.Sinks.overwritePartitions]]). An at-least-once
+  * redelivery of a batch id therefore REPLACES its own partitions, never
+  * appends to them, and no other batch is touched — the reference's
+  * one-object-per-etl-key overwrite (upstream sinks/s3_bucket.py), i.e.
+  * Structured Streaming's idempotent-sink model. A readout is exact over
+  * any batch split because the store's partials merge exactly; each sink
+  * says why its merge is. The batch twins replay their delivery schedule
+  * with [[replayDeliveries]]; the forget re-process finds its batches
+  * with [[affectedBatches]]. Both use one batch rule, pmod(id, n).
   */
 object Streams {
 
@@ -184,31 +198,52 @@ object Streams {
       lateness: String = "1 hour"): DataFrame =
     events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
 
+  /** The store contract's one write: tag `partials` with `batch_id` and
+    * overwrite exactly this batch's partitions of `dir`. `leadingCols`
+    * partition ahead of `batch_id`, so reads prune by day or list first. */
+  def writeBatch(partials: DataFrame, batchId: Long, dir: String,
+      leadingCols: String*): Unit =
+    graft.sources.Sinks.overwritePartitions(
+      partials.withColumn("batch_id", lit(batchId)), dir,
+      (leadingCols :+ "batch_id"): _*)
+
   /** ST5: idempotent sink — per micro-batch, dedup on the lineage key,
-    * then OVERWRITE the batch's own partition (dynamic partition
-    * overwrite): a re-delivered batch id rewrites exactly its partition
-    * instead of appending duplicates — the reference's etl-key overwrite
-    * semantics (upstream sinks/s3_bucket.py: one S3 object per etl key,
-    * re-ETL replaces it). Effectively-exactly-once on top of the
+    * then [[writeBatch]]: effectively-exactly-once on top of the
     * checkpoint's at-least-once redelivery. */
   def idempotentAppend(batch: DataFrame, batchId: Long, dir: String, keyCols: Seq[String]): Unit =
-    batch
-      .dropDuplicates(keyCols)
-      .withColumn("batch_id", lit(batchId))
-      // writer-scoped option, NOT session conf: a session-level dynamic
-      // mode would silently change overwrite semantics for every later
-      // partitioned write on the shared session
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(batch.dropDuplicates(keyCols), batchId, dir)
+
+  /** The batch rule of every replayed store and of the forget
+    * re-process: a row with id `key` lands in batch pmod(key, n). */
+  private def batchOf(key: String, n: Long): Column = pmod(col(key), lit(n))
+
+  /** The rows that delivery `b` of an `n`-batch replay carries. */
+  private[graft] def deliveryOf(rows: DataFrame, key: String, n: Long,
+      b: Long): DataFrame =
+    rows.filter(batchOf(key, n) === b)
+
+  /** A batch twin's delivery schedule: batches 0 until `nBatches` in
+    * order, then an at-least-once redelivery of batch `redeliver`, which
+    * the store contract must turn into a no-op. */
+  private def replayDeliveries(rows: DataFrame, key: String,
+      nBatches: Long = 2L, redeliver: Long = 0L)(
+      sink: (DataFrame, Long) => Unit): Unit = {
+    (0L until nBatches).foreach(b => sink(deliveryOf(rows, key, nBatches, b), b))
+    sink(deliveryOf(rows, key, nBatches, redeliver), redeliver)
+  }
+
+  /** The doc batches a tombstone set touches — the forget re-process's
+    * work list: distinct pmod(doc_id, n) over `ids`, sorted (≤ n rows
+    * reach the driver). */
+  private[graft] def affectedBatches(ids: DataFrame, n: Long): Seq[Long] =
+    ids.select(batchOf("doc_id", n)).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
 
   /** ST8: the streaming MAINTAINER of the daily sketch rollup behind the
     * dashboard ([[graft.operators.Aggregates.sketchDashboardFrame]]): per
     * micro-batch, fold the batch's events into per-(day, event_type)
     * PARTIAL sketches and write them under the batch's own
-    * (day, batch_id) partitions — dynamic partition overwrite, so a
-    * REDELIVERED batch replaces exactly its own partials instead of
-    * double-counting (the same effectively-exactly-once recipe as
-    * [[idempotentAppend]]). The store accretes one partial row per
+    * (day, batch_id) partitions. The store accretes one partial row per
     * (day, event_type, batch); reads stay day-pruned, and because the
     * partials are mergeable the dashboard merge is exact over ANY number
     * of rows per day — the writer never compacts or rewrites history,
@@ -217,57 +252,39 @@ object Streams {
     * keeps KB-scale dashboard state fresh without ever re-scanning raw
     * events. */
   def sketchStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.operators.Aggregates.sketchPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day", "batch_id").parquet(dir)
+    writeBatch(graft.operators.Aggregates.sketchPartialsOf(batch), batchId, dir, "day")
 
   /** ST9 (forward idea s): stream-maintained SHARD-MANIFEST store — the
     * export twin of [[sketchStoreSink]]. Each micro-batch writes its own
     * partial manifest under `batch_id=…`; partials obey
     * [[graft.llm.TextOps.mergeManifests]]' distributive algebra
     * (sums / min / max / xor), so the merged readout is exact over any
-    * number of partials, and a redelivered batch id overwrites only its
-    * own partition (dynamic partition overwrite: at-least-once delivery
-    * → exactly-once manifest). A continuously-ingesting exporter keeps
+    * number of partials. A continuously-ingesting exporter keeps
     * the trainer-facing manifest fresh without ever re-reading old
     * shards. */
   def manifestStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.shardManifest(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.shardManifest(batch), batchId, dir)
 
   /** ST21: stream-maintained PACKING-manifest store — the batch-assembly
     * twin of [[manifestStoreSink]]: a continuously-ingesting exporter
     * keeps the trainer-facing chunk geometry fresh without re-reading
     * packed shards. Each micro-batch writes per-packing-shard partials
     * ([[graft.llm.TextOps.packPartialsOf]]: doc/token sums + xor
-    * fingerprint, all distributive) under its own batch partition
-    * (dynamic idempotent overwrite); the readout
-    * ([[graft.llm.TextOps.packMergeFrom]]) re-derives n_chunks/last_fill
-    * from the merged totals — exact, because gap-free concat packing
+    * fingerprint, all distributive) under its own batch partition; the
+    * readout ([[graft.llm.TextOps.packMergeFrom]]) re-derives
+    * n_chunks/last_fill from the merged totals — exact, because gap-free concat packing
     * pins n_chunks to ceil(n_tokens/ctx). */
   def packStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.packPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.packPartialsOf(batch), batchId, dir)
 
-  /** ST21 batch twin / driver gate: two deterministic micro-batches
-    * (doc_id parity split) sunk through [[packStoreSink]], batch 0
-    * REDELIVERED to prove the idempotent overwrite, then the merged
-    * readout — gated by `text_pack_manifest`'s oracle VERBATIM (the
-    * maintained store must be indistinguishable from packing the whole
-    * corpus in one shot). */
+  /** ST21 batch twin / driver gate: the doc_id parity replay sunk
+    * through [[packStoreSink]], then the merged readout — gated by
+    * `text_pack_manifest`'s oracle VERBATIM (the maintained store must be
+    * indistinguishable from packing the whole corpus in one shot). */
   val streamPackStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "pack_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val p = s"$dd/p"
-      packStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
-      packStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      packStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        packStoreSink(_, _, s"$dd/p"))
     }
     graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
   }
@@ -277,21 +294,14 @@ object Streams {
     * ([[graft.llm.Multimodal.mmPackPartialsOf]]), so one maintenance
     * recipe serves text-only and interleaved exporters. */
   def mmPackStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.Multimodal.mmPackPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.Multimodal.mmPackPartialsOf(batch), batchId, dir)
 
   /** ST21b batch twin / driver gate: gated by `mm_pack_manifest`'s
     * coordinate-derived oracle VERBATIM. */
   val streamMmPackStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "mm_pack_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val p = s"$dd/p"
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        mmPackStoreSink(_, _, s"$dd/p"))
     }
     graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
   }
@@ -303,15 +313,11 @@ object Streams {
     * its docs into per-source partials
     * ([[graft.llm.TextOps.qualityPartialsOf]]: sums / min / max plus a
     * DECIMAL quality sum, all distributive) written under the batch's
-    * own partition — dynamic partition overwrite, so a redelivered batch
-    * replaces exactly itself ([[idempotentAppend]]'s recipe). The
-    * readout re-merges |sources|×|batches| KB-scale rows; at 100 TB/day
-    * the monitor's refresh cost is independent of corpus size. */
+    * own partition. The readout re-merges |sources|×|batches| KB-scale
+    * rows; at 100 TB/day the monitor's refresh cost is independent of
+    * corpus size. */
   def qualityStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.qualityPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.qualityPartialsOf(batch), batchId, dir)
 
   /** ST15: stream-maintained CLASSIFIER pass-rate monitor — the quality
     * monitor's decision-level twin: "what fraction of each source is the
@@ -321,10 +327,10 @@ object Streams {
     * micro-batch scores ITSELF (per-doc score is batch-local: one
     * broadcast hash join + a per-doc mean) and writes per-source
     * partials — doc/pass counts plus a DECIMAL score sum, all
-    * distributive — under its own batch partition (dynamic idempotent
-    * overwrite). Because the frozen model makes every doc's score
-    * independent of its batch, the merged store equals the full-corpus
-    * scoring pass BIT-identically under any split or redelivery. */
+    * distributive — under its own batch partition. Because the frozen
+    * model makes every doc's score independent of its batch, the merged
+    * store equals the full-corpus scoring pass BIT-identically under any
+    * split or redelivery. */
   /** One batch's per-source partials against the frozen model: doc and
     * pass counts plus a DECIMAL score sum — every column distributive. */
   def classifierPartialsOf(batch: DataFrame, model: DataFrame): DataFrame =
@@ -338,10 +344,7 @@ object Streams {
 
   def classifierStoreSink(batch: DataFrame, batchId: Long, dir: String,
       model: DataFrame): Unit =
-    classifierPartialsOf(batch, model)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(classifierPartialsOf(batch, model), batchId, dir)
 
   /** The pass-rate readout over ANY union of [[classifierPartialsOf]]
     * rows: re-sum the distributive partials, then derive the integer
@@ -363,19 +366,14 @@ object Streams {
   def classifierStoreReadout(s: SparkSession, dir: String): DataFrame =
     classifierMergeFrom(s.read.parquet(dir))
 
-  /** ST15 batch twin: two disjoint batches scored against the stored
-    * model + an at-least-once redelivery, then the merged readout —
-    * gated by the FULL-corpus scoring oracle verbatim (exactness under
-    * batching, not mere consistency). */
+  /** ST15 batch twin: the parity replay scored against the stored
+    * model, then the merged readout — gated by the FULL-corpus scoring
+    * oracle verbatim (exactness under batching, not mere consistency). */
   val streamClassifierStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "classifier_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
       val model = graft.llm.TextOps.nbModelStored(s, d)
-      val c = s"$dd/c"
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, model)
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c, model)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, model)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        classifierStoreSink(_, _, s"$dd/c", model))
     }
     classifierStoreReadout(s, s"$dir/c")
   }
@@ -384,20 +382,17 @@ object Streams {
     * drift alarm: SQ8 codes are only as good as the per-dimension
     * [mn, mx] ranges they were trained on, and arriving data OUTSIDE the
     * stored range silently clamps to 0/255. Each batch folds its vectors
-    * into per-dim (mn, mx) partials under its own partition (dynamic
-    * idempotent overwrite); min/max are MONOTONE-distributive, so the
-    * merged store equals the full-corpus stats EXACTLY under any batch
-    * split or redelivery — comparing it against the frozen `sq8` stats
+    * into per-dim (mn, mx) partials under its own partition; min/max are
+    * MONOTONE-distributive, so the merged store equals the full-corpus
+    * stats EXACTLY under any batch split or redelivery — comparing it against the frozen `sq8` stats
     * artifact is the re-encode trigger. (Unlike the IVF delta, an SQ8
     * re-encode is corpus-proportional — which is exactly why production
     * freezes stats per index generation and watches this monitor.) */
   def sq8StatsSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    batch
-      .select(posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-      .groupBy("pos").agg(min("col").as("mn"), max("col").as("mx"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(
+      batch.select(posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
+        .groupBy("pos").agg(min("col").as("mn"), max("col").as("mx")),
+      batchId, dir)
 
   /** The accumulated range readout: re-min/max the per-batch partials. */
   def sq8StatsReadout(s: SparkSession, dir: String): DataFrame =
@@ -405,17 +400,13 @@ object Streams {
       .groupBy("pos").agg(min("mn").as("mn"), max("mx").as("mx"))
       .orderBy("pos")
 
-  /** ST16 batch twin: two disjoint batches + an at-least-once
-    * redelivery, then the merged readout — gated by the one-shot
-    * full-corpus per-dim stats oracle (exactness, not consistency). */
+  /** ST16 batch twin: the vec_id parity replay, then the merged readout
+    * — gated by the one-shot full-corpus per-dim stats oracle
+    * (exactness, not consistency). */
   val streamSq8Stats: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "sq8_stats_stream", d) { dd =>
-      val vecs = t(s, d, "embeddings")
-      val p = s"$dd/p"
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 0), 0L, p)
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 0), 0L, p)
+      replayDeliveries(t(s, d, "embeddings"), "vec_id")(
+        sq8StatsSink(_, _, s"$dd/p"))
     }
     sq8StatsReadout(s, s"$dir/p")
   }
@@ -426,7 +417,7 @@ object Streams {
     * ([[graft.llm.TextOps.bigramLmStored]] — training is a separate
     * periodic job) are batch-independent, so the stream maintains the
     * per-doc SCORE table (one row per doc — KB-scale beside the corpus)
-    * under per-batch dynamic idempotent overwrite, and the readout
+    * under per-batch partitions, and the readout
     * re-RANKS the merged scores into head/middle/tail. Score being a pure
     * per-doc function of the frozen model makes the merged store equal
     * the one-shot full-corpus pass BIT-identically under any batch split
@@ -434,28 +425,21 @@ object Streams {
     * the corpus. */
   def pplStoreSink(batch: DataFrame, batchId: Long, dir: String,
       ab: DataFrame, ctx: DataFrame, v: DataFrame): Unit =
-    graft.llm.TextOps.bigramNllAgainstLm(batch, ab, ctx, v)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.bigramNllAgainstLm(batch, ab, ctx, v), batchId, dir)
 
   /** The accumulated tier readout: rank the merged per-doc scores. */
   def pplStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.pplTiersFrom(
       s.read.parquet(dir).select("doc_id", "source", "n_bigrams", "nll"))
 
-  /** ST17 batch twin: two disjoint batches scored against the frozen LM
-    * + an at-least-once redelivery, then the ranked readout — gated by
-    * `text_ppl_buckets`' full-corpus oracle verbatim. */
+  /** ST17 batch twin: the parity replay scored against the frozen LM,
+    * then the ranked readout — gated by `text_ppl_buckets`' full-corpus
+    * oracle verbatim. */
   val streamPplStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "ppl_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
       val (ab, ctx, v) = graft.llm.TextOps.bigramLmStored(s, d)
-      val c = s"$dd/c"
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, ab, ctx, v)
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c, ab, ctx, v)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, ab, ctx, v)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        pplStoreSink(_, _, s"$dd/c", ab, ctx, v))
     }
     pplStoreReadout(s, s"$dir/c")
   }
@@ -465,9 +449,9 @@ object Streams {
     * of this doc's trigrams has the corpus never seen before?), so a
     * continuously ingesting pipeline wants it answered per batch without
     * re-scanning history. Each micro-batch writes two doc-bounded
-    * partials under its own partition (dynamic idempotent overwrite):
-    * its grams' batch-local first-seen table (g, first_doc = min doc_id
-    * within the batch) and its docs' distinct-gram counts. The readout
+    * partials under its own partition: its grams' batch-local
+    * first-seen table (g, first_doc = min doc_id within the batch) and
+    * its docs' distinct-gram counts. The readout
     * re-mins the first-seen rows across batches — min is
     * monotone-distributive, so the merged table equals the whole-corpus
     * recompute EXACTLY under any batch split or redelivery order (the
@@ -475,14 +459,10 @@ object Streams {
     * explode over itself; history is never re-read. */
   def noveltyStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val occ = graft.llm.TextOps.gramOccurrencesOf(batch).localCheckpoint()
-    occ.groupBy("g").agg(min("doc_id").as("first_doc"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/grams")
-    occ.groupBy("doc_id").agg(countDistinct("g").as("n_grams"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/docs")
+    writeBatch(occ.groupBy("g").agg(min("doc_id").as("first_doc")),
+      batchId, s"$dir/grams")
+    writeBatch(occ.groupBy("doc_id").agg(countDistinct("g").as("n_grams")),
+      batchId, s"$dir/docs")
   }
 
   /** The accumulated novelty readout: re-min the per-batch first-seen
@@ -502,8 +482,7 @@ object Streams {
     * ([[graft.llm.Similarity.deconHitsAgainstIndex]]: probe selection
     * depends only on the fixed centroids, hits only on the fixed lists)
     * and writes its (bid, nid, cosine) hit partials under its own batch
-    * partition — dynamic idempotent overwrite, so a redelivered batch
-    * replaces exactly itself. The readout re-rolls count + struct-max
+    * partition. The readout re-rolls count + struct-max
     * across batches — both distributive, so the merged store equals the
     * one-shot whole-bench decon BIT-identically under any batch split
     * or redelivery order. At 100 TB: a new eval suite costs one probe
@@ -517,11 +496,9 @@ object Streams {
   def deconDeltaSink(batch: DataFrame, batchId: Long, dir: String,
       tau: Double = 0.35): Unit = {
     val s = batch.sparkSession
-    graft.llm.Similarity.deconHitsAgainstIndex(batch,
-        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/inv"), tau)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/hits")
+    writeBatch(graft.llm.Similarity.deconHitsAgainstIndex(batch,
+        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/inv"), tau),
+      batchId, s"$dir/hits")
   }
 
   /** The accumulated readout in `sim_semantic_decon`'s output shape. */
@@ -545,7 +522,7 @@ object Streams {
   }
 
   /** ST23 batch twin / driver gate: index init + three bench-payload
-    * deliveries + an at-least-once redelivery, readout in
+    * deliveries + a redelivery of batch 1 after batch 2, readout in
     * mm_semantic_decon's output shape and gated by its oracle VERBATIM. */
   val streamMmDeconStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "mm_decon_store_stream", d) { dd =>
@@ -553,12 +530,8 @@ object Streams {
       mmDeconStoreInit(s, d, x)
       val bench = graft.llm.Multimodal.mmVecsOf(s, d)
         .filter(col("vec_id") % 10 === 0)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 0), 0L, x, tau = 0.999)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x, tau = 0.999)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 2), 2L, x, tau = 0.999)
-      // at-least-once redelivery of batch 1 AFTER batch 2: the overwrite
-      // replaces identical partials, the store must not drift
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x, tau = 0.999)
+      replayDeliveries(bench, "vec_id", 3L, redeliver = 1L)(
+        deconDeltaSink(_, _, x, tau = 0.999))
     }
     deconStoreReadout(s, s"$dir/x")
   }
@@ -571,10 +544,9 @@ object Streams {
     * (a) computes its in-row signatures, (b) joins them against the
     * ACCUMULATED index (base + every earlier delta — so cross-batch
     * pairs are found), (c) adds its banded internal pairs, writing all
-    * pairs AND its own index rows under its own batch partition with
-    * dynamic idempotent overwrite. A redelivered batch can only rewrite
-    * its own partitions; a redelivery arriving AFTER later batches may
-    * re-derive pairs those batches already recorded — exact duplicates
+    * pairs AND its own index rows under its own batch partition. A
+    * redelivery arriving AFTER later batches may re-derive pairs those
+    * batches already recorded — exact duplicates
     * by construction (same signatures, same jaccard), collapsed by the
     * readout's distinct, so the store never drifts. At 100 TB: history
     * is never re-shingled; each arriving batch pays its own signature
@@ -585,13 +557,10 @@ object Streams {
       .write.mode("overwrite").parquet(s"$dir/bands")
     graft.llm.Dedup.docShingleSetsFromShingles(sh)
       .write.mode("overwrite").parquet(s"$dir/sets")
-    graft.llm.Dedup.minhashScoredPairsFrom(sh)
+    writeBatch(graft.llm.Dedup.minhashScoredPairsFrom(sh)
       .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"),
-        graft.operators.Common.r4(col("jaccard")).as("jaccard"))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/pairs")
+      .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard")),
+      -1L, s"$dir/pairs")
   }
 
   def pairDeltaSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
@@ -617,20 +586,12 @@ object Streams {
       .minhashScoredPairsFrom(graft.llm.Dedup.shinglesOf(batch))
       .filter(col("jaccard") >= 0.5)
       .select(col("da"), col("db"),
-        graft.operators.Common.r4(col("jaccard")).as("jaccard"))
-    cross.unionByName(internal).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/pairs")
-    signed.select(col("doc_id"), posexplode(col("bands")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/dbands")
-    signed.select("doc_id", "hs", "n_sh")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/dsets")
+        r4(col("jaccard")).as("jaccard"))
+    writeBatch(cross.unionByName(internal).distinct(), batchId, s"$dir/pairs")
+    writeBatch(signed.select(col("doc_id"), posexplode(col("bands")))
+        .select(col("doc_id"), col("pos").as("band"), col("col").as("bh")),
+      batchId, s"$dir/dbands")
+    writeBatch(signed.select("doc_id", "hs", "n_sh"), batchId, s"$dir/dsets")
   }
 
   /** The accumulated pair-graph readout: distinct pairs across base and
@@ -659,11 +620,9 @@ object Streams {
     * touch only members of components the batch merged
     * (delta-proportional, never corpus-proportional). */
   def labelStoreInit(s: SparkSession, dir: String): Unit =
-    graft.llm.Dedup.clusterLabelsFrom(
-        s.read.parquet(s"$dir/pairs").select("da", "db"))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/labels")
+    writeBatch(graft.llm.Dedup.clusterLabelsFrom(
+        s.read.parquet(s"$dir/pairs").select("da", "db")),
+      -1L, s"$dir/labels")
 
   def labelDeltaSink(s: SparkSession, batchId: Long, dir: String): Unit = {
     // this batch's pairs (written by pairDeltaSink just before) — the
@@ -693,10 +652,7 @@ object Streams {
     val newLabeled = nodes.join(cur, Seq("id"), "left_anti")
       .join(broadcast(rm.withColumnRenamed("old_lbl", "id")), Seq("id"), "left")
       .select(col("id"), coalesce(col("new_lbl"), col("id")).as("lbl"))
-    updatedOld.unionByName(newLabeled)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/labels")
+    writeBatch(updatedOld.unionByName(newLabeled), batchId, s"$dir/labels")
   }
 
   /** The maintained labels in [[graft.llm.Dedup.clusterLabelsFrom]]'s
@@ -711,10 +667,8 @@ object Streams {
     * against the FIXED stored centroids
     * ([[graft.llm.Similarity.assignAgainstCentroids]]: one broadcast
     * pass, stateless) and written under its own (cid, batch_id)
-    * partitions — dynamic partition overwrite, so a redelivered batch
-    * replaces exactly its own rows (the [[idempotentAppend]] recipe).
-    * cid stays the leading partition column so probes partition-prune to
-    * the probed lists, delta rows included. Assignment depends only on
+    * partitions. cid stays the leading partition column so probes
+    * partition-prune to the probed lists, delta rows included. Assignment depends only on
     * the fixed centroids, so base ∪ delta is bit-identical to a batch
     * rebuild over the grown corpus with the same quantizer — probes stay
     * exact while the (expensive, rare) centroid re-train is a separate
@@ -722,10 +676,8 @@ object Streams {
     * and `sim_knn_recall`'s quality census. */
   def invlistStoreSink(batch: DataFrame, batchId: Long, dir: String,
       centroids: DataFrame): Unit =
-    graft.llm.Similarity.assignAgainstCentroids(batch, centroids)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid", "batch_id").parquet(dir)
+    writeBatch(graft.llm.Similarity.assignAgainstCentroids(batch, centroids),
+      batchId, dir, "cid")
 
   /** Read the streamed delta back in inverted-list shape. Partition
     * columns come back as the narrowest inferred type (cid as INT) — the
@@ -821,10 +773,9 @@ object Streams {
   }
 
   /** ST8 batch twin / driver gate: replay the streaming maintenance in
-    * batch — two deterministic "micro-batches" (an event_id parity
-    * split) sunk through [[sketchStoreSink]], batch 0 REDELIVERED to
-    * prove the idempotent overwrite — then the dashboard merge over the
-    * STREAMED store for the same 8-day window as `sketch_dashboard`,
+    * batch — the event_id parity replay sunk through [[sketchStoreSink]]
+    * — then the dashboard merge over the STREAMED store for the same
+    * 8-day window as `sketch_dashboard`,
     * pinned against exact raw-events values. A double-counted
     * redelivery, dropped partial, or mis-pruned day breaks the exact-n
     * pin; a broken cross-batch merge breaks the p50/HLL pins. Oracle:
@@ -832,12 +783,8 @@ object Streams {
     * indistinguishable from the batch rollup at read time). */
   val streamSketchStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "sketch_store_stream", d) { dd =>
-      val ev = t(s, d, "events")
-      val daily = s"$dd/daily"
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 0), 0L, daily)
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 1), 1L, daily)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 0), 0L, daily)
+      replayDeliveries(t(s, d, "events"), "event_id")(
+        sketchStoreSink(_, _, s"$dd/daily"))
     }
     graft.operators.Aggregates.dashboardPins(s, d,
       graft.operators.Aggregates.sketchMergeFrame(
@@ -845,20 +792,14 @@ object Streams {
       "2024-01-05", "2024-01-12")
   }
 
-  /** ST11 batch twin / driver gate: replay the quality-store maintenance
-    * in batch — two deterministic micro-batches (doc_id parity split)
-    * sunk through [[qualityStoreSink]], batch 0 REDELIVERED to prove the
-    * idempotent overwrite — then the monitor merge over the streamed
-    * store, which must be indistinguishable from a one-shot whole-corpus
-    * readout (the oracle computes exactly that). */
+  /** ST11 batch twin / driver gate: the doc_id parity replay sunk
+    * through [[qualityStoreSink]], then the monitor merge over the
+    * streamed store, which must be indistinguishable from a one-shot
+    * whole-corpus readout (the oracle computes exactly that). */
   val streamQualityStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "quality_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val q = s"$dd/q"
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, q)
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, q)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, q)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        qualityStoreSink(_, _, s"$dd/q"))
     }
     graft.llm.TextOps.qualityMergeFrom(s.read.parquet(s"$dir/q"))
   }
@@ -887,47 +828,36 @@ object Streams {
       labelStoreReadout(s, s"$dir/p"), t(s, d, "documents"))
   }
 
-  /** ST13 batch twin / driver gate: three deterministic micro-batches
-    * (doc_id mod-3 split) sunk through [[noveltyStoreSink]], batch 1
-    * REDELIVERED out of order, then the merged readout — gated by
-    * `text_ngram_novelty`'s oracle VERBATIM: the maintained store must
-    * be indistinguishable from a one-shot whole-corpus recompute. */
   /** The ST13 store directory, built once per (session, dataset) — shared
     * by the batch twin and the forget-propagation pass
     * ([[graft.llm.Forget]]), which re-processes affected batch partitions
-    * the way T13e does for the dictionary. Batch rule: doc_id %
-    * [[dictBatches]] (the store-family rule, readout-invariant). */
+    * the way T13e does for the dictionary. [[dictBatches]] deliveries,
+    * batch 1 REDELIVERED after the rest (min-merge makes the rewrite a
+    * no-op); the batch rule is readout-invariant. */
   private[graft] def noveltyStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "novelty_store_stream", d) { dd =>
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val n = s"$dd/n"
-      (0L until dictBatches).foreach { b =>
-        noveltyStoreSink(docs.filter(col("doc_id") % dictBatches === b), b, n)
-      }
-      // at-least-once redelivery of batch 1 AFTER the rest: min-merge
-      // makes the rewrite a no-op, the store must not drift
-      noveltyStoreSink(docs.filter(col("doc_id") % dictBatches === 1), 1L, n)
+      replayDeliveries(t(s, d, "documents").select("doc_id", "text"), "doc_id",
+        dictBatches, redeliver = 1L)(noveltyStoreSink(_, _, s"$dd/n"))
     }
 
+  /** ST13 batch twin / driver gate: the merged readout over
+    * [[noveltyStoreDir]] — gated by `text_ngram_novelty`'s oracle
+    * VERBATIM: the maintained store must be indistinguishable from a
+    * one-shot whole-corpus recompute. */
   val streamNoveltyStore: Q = (s, d) =>
     noveltyStoreReadout(s, s"${noveltyStoreDir(s, d)}/n")
 
   /** ST14 batch twin / driver gate: index init + three bench deliveries
-    * (vec_id mod-3 split of the bench tenth) + an out-of-order
-    * redelivery, then the merged readout — gated by
+    * (vec_id mod-3 split of the bench tenth) + a redelivery of batch 1
+    * after batch 2, then the merged readout — gated by
     * `sim_semantic_decon`'s oracle VERBATIM: the maintained store must
     * equal the one-shot whole-bench decon exactly. */
   val streamDeconStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "decon_store_stream", d) { dd =>
       val x = s"$dd/x"
       deconStoreInit(s, d, x)
-      val bench = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 0), 0L, x)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 2), 2L, x)
-      // at-least-once redelivery of batch 1 AFTER batch 2: the overwrite
-      // replaces identical partials, the store must not drift
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x)
+      replayDeliveries(t(s, d, "embeddings").filter(col("vec_id") % 10 === 0),
+        "vec_id", 3L, redeliver = 1L)(deconDeltaSink(_, _, x))
     }
     deconStoreReadout(s, s"$dir/x")
   }
@@ -939,33 +869,24 @@ object Streams {
     * doc's verdicts depend only on its own bytes, never on the corpus)
     * and folds them into per-source failure-count partials
     * ([[graft.llm.TextOps.rulePartialsOf]] — every column a distributive
-    * sum) written under the batch's own partition (dynamic idempotent
-    * overwrite, [[idempotentAppend]]'s recipe). Batch-independent
+    * sum) written under the batch's own partition. Batch-independent
     * verdicts make the merged store equal the full-corpus profile
     * BIT-identically under any split or redelivery — gated here by
     * text_rule_profile's oracle VERBATIM. At 100 TB/day the monitor
     * refresh is |sources|×|batches| KB-scale rows, corpus never
     * rescanned. */
   def ruleStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.rulePartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.rulePartialsOf(batch), batchId, dir)
 
   def ruleStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.ruleProfileMergeFrom(s.read.parquet(dir))
 
-  /** ST18 batch twin: two disjoint batches + an at-least-once redelivery
-    * of batch 0, then the merged readout — exactness under batching, not
-    * mere consistency. */
+  /** ST18 batch twin: the parity replay, then the merged readout —
+    * exactness under batching, not mere consistency. */
   val streamRuleStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "rule_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        ruleStoreSink(_, _, s"$dd/c"))
     }
     ruleStoreReadout(s, s"$dir/c")
   }
@@ -978,16 +899,12 @@ object Streams {
     * ([[graft.llm.TextOps.lineFreqsOf]]: doc counts distinct WITHIN the
     * batch — docs live in exactly one batch, so the counts are
     * distributive and the merged store equals the full-corpus frequency
-    * table EXACTLY under any split; redelivery overwrites its own batch
-    * partition). The gate rewrites the corpus against the MERGED store
-    * and must land on text_line_dedup's oracle VERBATIM — store-then-
-    * rewrite equals the one-shot pass bit-for-bit. */
+    * table EXACTLY under any split). The gate rewrites the corpus against
+    * the MERGED store and must land on text_line_dedup's oracle VERBATIM
+    * — store-then-rewrite equals the one-shot pass bit-for-bit. */
   def lineStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.lineFreqsOf(batch)
-      .withColumnRenamed("ldf", "n_docs")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.lineFreqsOf(batch).withColumnRenamed("ldf", "n_docs"),
+      batchId, dir)
 
   /** The merged frequency table over the store's batch partitions. */
   def lineStoreFreqs(s: SparkSession, dir: String): DataFrame =
@@ -995,17 +912,13 @@ object Streams {
       .groupBy("lh")
       .agg(sum("n_docs").as("ldf"))
 
-  /** ST19 batch twin: two disjoint batches + an at-least-once redelivery
-    * build the store; the corpus rewritten against the merged table is
-    * gated by the one-shot oracle verbatim. */
+  /** ST19 batch twin: the parity replay builds the store; the corpus
+    * rewritten against the merged table is gated by the one-shot oracle
+    * verbatim. */
   private[graft] def lineStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "line_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        lineStoreSink(_, _, s"$dd/c"))
     }
 
   val streamLineStore: Q = (s, d) =>
@@ -1022,10 +935,7 @@ object Streams {
     * just start leaking credentials?" from |sources|×|batches| KB-scale
     * rows — the corpus is never rescanned. */
   def secretStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.secretPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.secretPartialsOf(batch), batchId, dir)
 
   /** The merged per-source monitor over the store's batch partitions. */
   def secretStoreReadout(s: SparkSession, dir: String): DataFrame =
@@ -1034,18 +944,13 @@ object Streams {
       .agg(sum("n_secret_docs").as("n_secret_docs"))
       .orderBy("source")
 
-  /** ST22 batch twin / driver gate: two disjoint batches + an
-    * at-least-once redelivery of batch 0, then the merged readout —
-    * gated by the one-shot per-source secret profile (text_secret_scan's
-    * flag arithmetic aggregated per source) VERBATIM. */
+  /** ST22 batch twin / driver gate: the parity replay, then the merged
+    * readout — gated by the one-shot per-source secret profile
+    * (text_secret_scan's flag arithmetic aggregated per source) VERBATIM. */
   val streamSecretStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "secret_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        secretStoreSink(_, _, s"$dd/c"))
     }
     secretStoreReadout(s, s"$dir/c")
   }
@@ -1062,19 +967,9 @@ object Streams {
     * re-reads stores plus exactly one corpus pass (the line-count
     * probe, which needs the docs regardless). */
   def hygieneStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
-    graft.llm.TextOps.rulePartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/rules")
-    graft.llm.TextOps.lineFreqsOf(batch)
-      .withColumnRenamed("ldf", "n_docs")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/lines")
-    graft.llm.TextOps.secretPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/secrets")
+    ruleStoreSink(batch, batchId, s"$dir/rules")
+    lineStoreSink(batch, batchId, s"$dir/lines")
+    secretStoreSink(batch, batchId, s"$dir/secrets")
   }
 
   def hygieneStoreReadout(s: SparkSession, dir: String,
@@ -1085,16 +980,12 @@ object Streams {
       s.read.parquet(s"$dir/rules").drop("batch_id"),
       s.read.parquet(s"$dir/secrets").drop("batch_id"))
 
-  /** ST20 batch twin: two disjoint batches + an at-least-once redelivery
-    * across all three sub-stores, then the composed readout. */
+  /** ST20 batch twin: the parity replay across all three sub-stores,
+    * then the composed readout. */
   val streamHygieneStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "hygiene_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replayDeliveries(t(s, d, "documents"), "doc_id")(
+        hygieneStoreSink(_, _, s"$dd/c"))
     }
     hygieneStoreReadout(s, s"$dir/c", t(s, d, "documents"))
   }
@@ -1105,12 +996,11 @@ object Streams {
     * (df, cf, max_tf, best-(−tf, doc)) partials
     * ([[graft.llm.TextOps.dfPartialsOf]] — docs live in exactly one
     * batch, so df/cf sum exactly and the argmax-doc min-struct merges
-    * without drift) written under the batch's own partition (dynamic
-    * idempotent overwrite). The merged readout must equal the one-shot
-    * dictionary BIT-identically under any split or redelivery — gated
-    * by text_inverted_index's oracle VERBATIM. At 100 TB the refresh is
-    * |vocabulary|×|batches| KB-scale rows; the corpus is never
-    * re-tokenized. */
+    * without drift) written under the batch's own partition. The merged
+    * readout must equal the one-shot dictionary BIT-identically under any
+    * split or redelivery — gated by text_inverted_index's oracle
+    * VERBATIM. At 100 TB the refresh is |vocabulary|×|batches| KB-scale
+    * rows; the corpus is never re-tokenized. */
   /** Existence check through the path's OWN Hadoop FileSystem — a plain
     * java.io.File(dir).exists() only inspects the local disk, so for the
     * hdfs:// / s3a:// stores a 100 TB deployment actually uses it would
@@ -1120,19 +1010,17 @@ object Streams {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** The dictionary store's batch rule: doc_id % dictBatches. ≥8 batches
-    * (r17 verdict #3) so a partial tombstone feed leaves genuinely
-    * UNTOUCHED partitions — the |affected batches| ≪ |batches| cost claim
-    * is exercisable (ForgetSpec pins it), not just narrated. Production
-    * would key batches by ingest day; the modulus is the sandbox stand-in
-    * and every readout is batch-rule-invariant (the merge is exact). */
+  /** The dictionary store's batch count (doc → pmod(doc_id, dictBatches)).
+    * ≥8 batches (r17 verdict #3) so a partial tombstone feed leaves
+    * genuinely UNTOUCHED partitions — the |affected batches| ≪ |batches|
+    * cost claim is exercisable (ForgetSpec pins it), not just narrated.
+    * Production would key batches by ingest day; the modulus is the
+    * sandbox stand-in and every readout is batch-rule-invariant (the
+    * merge is exact). */
   private[graft] val dictBatches = 8L
 
   def dfStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.dfPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(graft.llm.TextOps.dfPartialsOf(batch), batchId, dir)
 
   def dfStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.invertedIndexMergeFrom(s.read.parquet(dir))
@@ -1140,16 +1028,11 @@ object Streams {
   /** The ST24 store directory, built once per (session, dataset) — shared
     * by the batch twin below and the forget-propagation pass
     * ([[graft.llm.Forget]]), which re-processes affected batch partitions
-    * in place of a corpus rebuild. Batch rule: doc_id % [[dictBatches]]. */
+    * in place of a corpus rebuild. */
   private[graft] def dfStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "df_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      (0L until dictBatches).foreach { b =>
-        dfStoreSink(docs.filter(col("doc_id") % dictBatches === b), b, c)
-      }
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      dfStoreSink(docs.filter(col("doc_id") % dictBatches === 0), 0L, c)
+      replayDeliveries(t(s, d, "documents"), "doc_id", dictBatches)(
+        dfStoreSink(_, _, s"$dd/c"))
     }
 
   /** ST24 batch twin: [[dictBatches]] disjoint batches + an at-least-once
@@ -1163,8 +1046,8 @@ object Streams {
     * real GDPR pipeline takes: deletes trickle in, the index must
     * converge to the fully-purged state, and a redelivered tombstone
     * batch must be a no-op. Each sink call (1) records its tombstone
-    * batch under its own partition (dynamic idempotent overwrite), then
-    * (2) re-derives the dictionary partials of ONLY the doc-batches its
+    * batch under its own partition, then (2) re-derives the dictionary
+    * partials of ONLY the doc-batches its
     * tombstones touch, from the raw slice purged by the CUMULATIVE
     * stored tombstone set — monotone, so any redelivery or reordering
     * re-derives the same or a more-purged partial and the store can
@@ -1189,17 +1072,11 @@ object Streams {
             .select("doc_id")).distinct()
       else tombBatch.select("doc_id")
     ).localCheckpoint()
-    merged
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombsDir)
+    writeBatch(merged, batchId, tombsDir)
     val allTombs = s.read.parquet(tombsDir).select("doc_id")
-    val affected: Seq[Long] = merged
-      .select(pmod(col("doc_id"), lit(dictBatches)).as("b")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
-    affected.foreach { bid =>
+    affectedBatches(merged, dictBatches).foreach { bid =>
       dfStoreSink(
-        docs.filter(col("doc_id") % dictBatches === bid)
+        deliveryOf(docs, "doc_id", dictBatches, bid)
           .join(broadcast(allTombs), Seq("doc_id"), "left_anti"),
         bid, s"$dir/c")
     }
@@ -1214,7 +1091,7 @@ object Streams {
       val docs = t(s, d, "documents")
       val c = dd.toString
       (0L until dictBatches).foreach { b =>
-        dfStoreSink(docs.filter(col("doc_id") % dictBatches === b), b, s"$c/c")
+        dfStoreSink(deliveryOf(docs, "doc_id", dictBatches, b), b, s"$c/c")
       }
       val t37 = docs.select("doc_id").filter(col("doc_id") % 37 === 0)
       val t41 = docs.select("doc_id").filter(col("doc_id") % 41 === 0)
@@ -1243,16 +1120,14 @@ object Streams {
       tombsDir: String, k: Long): DataFrame = {
     val prefix = s.read.parquet(tombsDir)
       .filter(col("batch_id") <= k).select("doc_id")
-    val affected: Seq[Long] = prefix
-      .select(pmod(col("doc_id"), lit(dictBatches)).as("b")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val affected = affectedBatches(prefix, dictBatches)
     val partCols = Seq("w", "df", "cf", "max_tf", "ntf", "top_doc")
     val untouched = s.read.parquet(baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .select(partCols.map(col): _*)
     val rederived = affected.map { bid =>
       graft.llm.TextOps.dfPartialsOf(
-        docs.filter(col("doc_id") % dictBatches === bid)
+        deliveryOf(docs, "doc_id", dictBatches, bid)
           .join(broadcast(prefix), Seq("doc_id"), "left_anti"))
         .select(partCols.map(col): _*)
     }
@@ -1268,10 +1143,8 @@ object Streams {
     val docs = t(s, d, "documents")
     val dir = graft.llm.Artifacts.buildOnce(s, "forget_asof_stream", d) { dd =>
       Seq(37L -> 0L, 41L -> 1L, 43L -> 2L).foreach { case (m, bid) =>
-        docs.select("doc_id").filter(col("doc_id") % m === 0)
-          .withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dd/tombs")
+        writeBatch(docs.select("doc_id").filter(col("doc_id") % m === 0),
+          bid, s"$dd/tombs")
       }
     }
     asofDictRead(s, docs, s"${dfStoreDir(s, d)}/c", s"$dir/tombs", k = 1L)
@@ -1313,15 +1186,14 @@ object Streams {
       case Some(w) => col("ts") < lit(w) - expr("INTERVAL 10 MINUTES")
       case None    => lit(false)
     }
-    batch
-      .withColumn("late", lateFlag)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_total"),
-        sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
-        max("ts").as("bmax"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(
+      batch
+        .withColumn("late", lateFlag)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_total"),
+          sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
+          max("ts").as("bmax")),
+      batchId, dir)
   }
 
   def lateStoreReadout(s: SparkSession, dir: String): DataFrame =
@@ -1359,8 +1231,7 @@ object Streams {
   /** ST26: stream-maintained CDC UPSERT store — the change-data-capture
     * feed as an incrementally maintained store (the Delta/Iceberg
     * change-feed shape): each micro-batch of change rows lands under its
-    * own partition (dynamic idempotent overwrite — a redelivered batch
-    * can only rewrite itself), and the readout applies the PER-KEY
+    * own partition, and the readout applies the PER-KEY
     * LATEST change (last-writer-wins via max over struct(batch_id, …) —
     * a plain distributive aggregate over the KB-scale feed, no
     * state-store) to the base table through the same one-join apply as
@@ -1372,10 +1243,7 @@ object Streams {
     * regress it). At 100 TB the apply is one equi-join per refresh; the
     * feed itself is never rescanned, only its per-key argmax. */
   def cdcStoreSink(changes: DataFrame, batchId: Long, dir: String): Unit =
-    changes
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    writeBatch(changes, batchId, dir)
 
   def cdcStoreApply(s: SparkSession, dir: String, base: DataFrame): DataFrame =
     cdcStoreApplyAsOf(s, dir, base, Long.MaxValue)
@@ -1408,11 +1276,8 @@ object Streams {
     graft.llm.Artifacts.buildOnce(s, "cdc_store_stream", d) { dd =>
       val changes = graft.etl.Transforms.cdcChangesOf(t(s, d, "orders"))
       val c = s"$dd/c"
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 0), 0L, c)
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 1), 1L, c)
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 2), 2L, c)
-      // at-least-once redelivery of batch 1: must overwrite, not append
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 1), 1L, c)
+      replayDeliveries(changes, "o_orderkey", 3L, redeliver = 1L)(
+        cdcStoreSink(_, _, c))
       // upsert override: a later batch re-issues the %30==3 subset —
       // last-writer-wins must pick batch 3's (identical) rows
       cdcStoreSink(changes.filter(col("o_orderkey") % 30 === 3), 3L, c)

@@ -920,6 +920,23 @@ class CorpusOpsSpec extends graft.SparkSpec {
       s"degenerate ensemble: $kept of ${rows.length}")
   }
 
+  test("quality ensemble: the NLL vote counts a NULL-source doc's tokens " +
+      "exactly like the standalone perplexity gate") {
+    import spark.implicits._
+    // doc 3 has no source, so no NB class; its tokens still make `c` the
+    // corpus's most frequent word, which ranks doc 2 first in src1
+    val docs = Seq((1L, Some("src1"), "a b"), (2L, Some("src1"), "c e"),
+        (3L, None, "c c c c"))
+      .toDF("doc_id", "source", "text")
+    val kept = TextOps.qualityFilterOf(docs).select("doc_id")
+      .collect().map(_.getLong(0)).toSet
+    assert(kept === Set(2L))
+    val votes = TextOps.ensembleVotesOf(docs).collect()
+    assert(votes.length === 3)
+    votes.foreach(r => assert(
+      r.getAs[Boolean]("pass_nll") === kept(r.getAs[Long]("doc_id")), r))
+  }
+
   // ---- pipeline_corpus_ensemble ----
 
   test("ensemble-gated chain: every survivor passed the 2-of-3 vote on " +

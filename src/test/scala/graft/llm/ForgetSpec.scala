@@ -339,10 +339,8 @@ class ForgetSpec extends graft.SparkSpec {
     val docs = graft.Tables.t(spark, sf, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft-asof").toString
     Seq(37L -> 0L, 41L -> 1L, 43L -> 2L).foreach { case (m, bid) =>
-      docs.select("doc_id").filter(col("doc_id") % m === 0)
-        .withColumn("batch_id", lit(bid))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(s"$dir/tombs")
+      graft.streaming.Streams.writeBatch(
+        docs.select("doc_id").filter(col("doc_id") % m === 0), bid, s"$dir/tombs")
     }
     val baseC = s"${graft.streaming.Streams.dfStoreDir(spark, sf)}/c"
     val atK2 = graft.streaming.Streams

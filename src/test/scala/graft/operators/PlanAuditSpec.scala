@@ -441,4 +441,49 @@ class PlanAuditSpec extends graft.SparkSpec {
     }
     assert(p.contains("TakeOrderedAndProject"), p)
   }
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so two marker jobs bracket the window:
+    * once the closing marker's start is seen, every job between them has
+    * been seen too. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-during:open")
+      body
+      marker("jobs-during:close")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("jobs-during:close") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val log = seen.toArray.toSeq.map(_.toString)
+      assert(log.contains("jobs-during:close"), s"closing marker never seen: $log")
+      log.indexOf("jobs-during:close") - log.indexOf("jobs-during:open") - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("spreadScan decides without running a Spark job, on a scan-shaped " +
+    "and on a composed join+aggregate frame") {
+    import org.apache.spark.sql.functions.{count, lit}
+    val docs = graft.Tables.t(spark, sf, "documents")
+    val composed = docs.join(
+      docs.groupBy("source").agg(count(lit(1)).as("n_src")), Seq("source"))
+    assert(jobsDuring(Common.spreadScan(docs)) === 0)
+    assert(jobsDuring(Common.spreadScan(composed)) === 0)
+    // the probe spreadScan refuses on composed frames does run jobs —
+    // the listener window would see a regression that probed them
+    assert(jobsDuring(composed.rdd.getNumPartitions) > 0)
+  }
 }

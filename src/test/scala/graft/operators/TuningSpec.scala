@@ -36,16 +36,26 @@ class TuningSpec extends graft.SparkSpec {
     val ev = graft.Tables.t(spark, sf, "events")
     val iv = ev.groupBy(col("user_id").as("uid"))
       .agg(min("value").as("lo"), max("value").as("hi"))
-    val direct = Relational
+    // n compares exactly; the raw sums compare within 1e-9 relative —
+    // the two plans add the same values in a different order, so a
+    // rounded sum could flip at a .005 boundary
+    def byUid(df: org.apache.spark.sql.DataFrame): Map[Any, (Long, Double)] =
+      df.collect().map(r => r.get(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val direct = byUid(Relational
       .bandedRangeJoin(ev.select("event_id", "value"), "value", iv, "lo", "hi", 25.0)
       .groupBy("uid")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
-      .orderBy("uid").collect().toSeq
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_v")))
+    assert(direct.nonEmpty)
     for (w <- Seq(1.0, 5.0, 25.0, 400.0)) {
-      val fast = Relational.bandedRangeAggByUid(ev, w)
-        .select(col("uid"), col("n"), round(col("sum_v_raw"), 2).as("sum_v"))
-        .orderBy("uid").collect().toSeq
-      assert(fast === direct, s"width $w")
+      val fast = byUid(Relational.bandedRangeAggByUid(ev, w)
+        .select("uid", "n", "sum_v_raw"))
+      assert(fast.keySet === direct.keySet, s"width $w")
+      fast.foreach { case (uid, (n, sumV)) =>
+        val (dn, dSum) = direct(uid)
+        assert(n === dn, s"width $w uid $uid")
+        assert(math.abs(sumV - dSum) <= 1e-9 * math.max(math.abs(dSum), 1.0),
+          s"width $w uid $uid: $sumV vs $dSum")
+      }
     }
   }
 

@@ -72,6 +72,25 @@ class SinksSpec extends graft.SparkSpec {
     assert(data === before)
   }
 
+  test("overwritePartitions rewrites only the partitions it carries and " +
+    "leaves the session's overwrite mode STATIC") {
+    val dir = Files.createTempDirectory("graft-opw").toString
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    Sinks.overwritePartitions(Seq((9L, "b")).toDF("id", "p"), dir, "p")
+    def rows = spark.read.parquet(dir).select("p", "id").orderBy("p")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    // the sibling partitions a and c survive; b is replaced, not appended
+    assert(rows === Seq("a" -> 1L, "b" -> 9L, "c" -> 3L))
+    // the dynamic mode was writer-scoped: the session conf is untouched
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+      .equalsIgnoreCase("STATIC"))
+    // so a plain partitioned overwrite still replaces the whole directory
+    Seq((7L, "d")).toDF("id", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(dir)
+    assert(rows === Seq("d" -> 7L))
+  }
+
   test("schema accretion at the storage layer: mergeSchema unifies evolving files") {
     // the reference's documents grow fields over time (schemaless JSON);
     // the columnar equivalent: older parquet files simply lack the new
